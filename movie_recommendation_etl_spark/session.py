@@ -42,6 +42,29 @@ def default_parallelism() -> int:
     return int(os.environ.get("SPARK_GRAFT_CPUS", os.cpu_count() or 8))
 
 
+def host_ram_bytes(*, available: bool = False) -> int | None:
+    """This host's physical RAM in bytes (``available=True``: the RAM free
+    right now), from sysconf; None where the platform does not expose it."""
+    try:
+        pages = os.sysconf("SC_AVPHYS_PAGES" if available else "SC_PHYS_PAGES")
+        return pages * os.sysconf("SC_PAGE_SIZE")
+    except (AttributeError, ValueError, OSError):
+        return None
+
+
+def default_driver_memory() -> str:
+    """Driver heap for sessions built here: ``$SPARK_GRAFT_DRIVER_MEM`` when
+    set, else 2/3 of physical RAM. A fixed default larger than the host's
+    RAM lets the kernel OOM-kill the JVM mid-run instead of Spark spilling;
+    the remaining third covers JVM off-heap, the Python workers and the OS.
+    Falls back to 16g where RAM cannot be read."""
+    env = os.environ.get("SPARK_GRAFT_DRIVER_MEM")
+    if env:
+        return env
+    ram = host_ram_bytes()
+    return f"{ram * 2 // 3 // 2**20}m" if ram else "16g"
+
+
 def get_spark(
     app_name: str = "movie_recommendation_etl_spark",
     master: str | None = None,
@@ -61,7 +84,7 @@ def get_spark(
     # thread; Spark's 1g default starves local[32] (OOM on cache-heavy
     # iterative queries at sf0.1). Only effective at JVM creation — a
     # getOrCreate() against a live session keeps its existing heap.
-    conf["spark.driver.memory"] = os.environ.get("SPARK_GRAFT_DRIVER_MEM", "16g")
+    conf["spark.driver.memory"] = default_driver_memory()
     # Seed value only — AQE coalesces to actual data volume at runtime.
     conf["spark.sql.shuffle.partitions"] = str(
         shuffle_partitions or max(default_parallelism(), 8)

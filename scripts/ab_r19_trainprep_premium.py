@@ -41,6 +41,9 @@ import sys
 import time
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, REPO)
+
+from movie_recommendation_etl_spark.session import host_ram_bytes  # noqa: E402
 
 PRESSURE_WORKERS = int(os.environ.get("SPARK_GRAFT_AB_WORKERS", "6"))
 PRESSURE_GB = float(os.environ.get("SPARK_GRAFT_AB_PRESSURE_GB", "6"))
@@ -51,13 +54,9 @@ PRESSURE_GB = float(os.environ.get("SPARK_GRAFT_AB_PRESSURE_GB", "6"))
 # stealing bandwidth — which would confound the A/B it exists to run.
 # Worker count is reduced (never the per-worker size: the premium scales
 # with per-worker working-set churn) until the total fits.
-try:
-    _avail_gb = (
-        os.sysconf("SC_AVPHYS_PAGES") * os.sysconf("SC_PAGE_SIZE") / (1 << 30)
-    )
-except (ValueError, OSError):  # pragma: no cover - exotic libc
-    _avail_gb = None
-if _avail_gb is not None:
+_avail = host_ram_bytes(available=True)
+if _avail is not None:
+    _avail_gb = _avail / (1 << 30)
     _budget = _avail_gb / 2
     if PRESSURE_WORKERS * PRESSURE_GB > _budget:
         _clamped = max(1, int(_budget // PRESSURE_GB))

@@ -41,12 +41,10 @@ def main() -> int:
     from movie_recommendation_etl_spark.session import get_spark
     from movie_recommendation_etl_spark.sources.catalog import load_table
 
-    # local[N] = one JVM for driver+executors: size the heap for the cached
+    # local[N] = one JVM for driver+executors: get_spark sizes the heap
+    # from host RAM (session.default_driver_memory) for the cached
     # 604k-vector corpus + fits (the reference ran driver 5g / executor 8g).
-    spark = get_spark(
-        app_name="bench_reference_scale",
-        extra_conf={"spark.driver.memory": "24g"},
-    )
+    spark = get_spark(app_name="bench_reference_scale")
     spark.sparkContext.setLogLevel("ERROR")
 
     # The replay runs minutes after the parent bench's calibration sample

@@ -1,10 +1,11 @@
 """Capture `.explain("formatted")` for every bench query line into
-plans/r20/<name>_<tag>.txt (tag = before/after) — the optimization round's
-plan evidence (spark_optimization_guide.md §1: measure first, keep the
-plan shape on record).
+plans/<round>/<name>_<tag>.txt (tag = before/after) — an optimization
+round's plan evidence (spark_optimization_guide.md §1: measure first, keep
+the plan shape on record).
 
-Usage: python scripts/capture_plans_r20.py [before|after] [name ...]
-       (no names = every bench line that returns a batch DataFrame)
+Usage: python scripts/capture_plans.py <round> [before|after] [name ...]
+       (round = output subdirectory, e.g. r21; no names = every bench line
+       that returns a batch DataFrame)
 """
 
 from __future__ import annotations
@@ -15,17 +16,19 @@ import sys
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-OUT_DIR = os.path.join(
-    os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
-    "plans",
-    "r20",
+PLANS_DIR = os.path.join(
+    os.path.dirname(os.path.dirname(os.path.abspath(__file__))), "plans"
 )
 
 
 def main() -> int:
     args = sys.argv[1:]
-    tag = args[0] if args else "before"
-    only = set(args[1:])
+    if not args:
+        print(__doc__, file=sys.stderr)
+        return 2
+    out_dir = os.path.join(PLANS_DIR, args[0])
+    tag = args[1] if len(args) > 1 else "before"
+    only = set(args[2:])
 
     import movie_recommendation_etl_spark.plans.all  # noqa: F401
     from movie_recommendation_etl_spark.plans.events_stream import (
@@ -44,7 +47,7 @@ def main() -> int:
     from movie_recommendation_etl_spark.session import get_spark
     from movie_recommendation_etl_spark.sources.catalog import warm_catalog
 
-    spark = get_spark(app_name="capture_plans_r20")
+    spark = get_spark(app_name="capture_plans")
     spark.sparkContext.setLogLevel("ERROR")
     warm_catalog(spark, SF_DIR, eager=True)
 
@@ -89,7 +92,7 @@ def main() -> int:
         "q80_trainprep_composed",
         "q81_budget_chunks",
     ]
-    os.makedirs(OUT_DIR, exist_ok=True)
+    os.makedirs(out_dir, exist_ok=True)
     for name in bench_names:
         if only and name not in only:
             continue
@@ -100,7 +103,7 @@ def main() -> int:
             )
         except Exception as e:  # capture the failure instead of dying
             plan = f"ERROR capturing plan: {e!r}\n"
-        path = os.path.join(OUT_DIR, f"{name}_{tag}.txt")
+        path = os.path.join(out_dir, f"{name}_{tag}.txt")
         with open(path, "w") as f:
             f.write(plan)
         print(f"wrote {path} ({len(plan)} bytes)")

@@ -44,8 +44,7 @@ from movie_recommendation_etl_spark.sources.catalog import load_table
 TARGET_DOCS = 604_074
 SF_DIR = "/root/testdata/sf0.1"
 
-spark = get_spark(app_name="profile_neardup",
-                  extra_conf={"spark.driver.memory": "24g"})
+spark = get_spark(app_name="profile_neardup")
 spark.sparkContext.setLogLevel("ERROR")
 
 docs = load_table(spark, SF_DIR, "documents").select("doc_id", "text")
