@@ -344,6 +344,7 @@ def _cmd_trainprep(args: argparse.Namespace) -> int:
     )
     from movie_recommendation_etl_spark.operators.training_prep import (
         chunk_documents,
+        filter_training_documents,
         pack_sequences,
         write_shard_manifest,
         write_training_shards,
@@ -373,108 +374,52 @@ def _cmd_trainprep(args: argparse.Namespace) -> int:
         sample_fraction=args.sample_fraction,
         extra_filter=extra_filter,
     )
-    base_curated = None
+    stats: dict = {}
     if (
         args.trusted_path
         or args.eval_path
         or args.substring_dedup
         or args.neardup
     ):
-        # Each optional stage below is a SELF-join (curated appears as both
-        # the stage input and the semi-join/rebuild left side), so without
-        # a persist the whole curation subtree re-executes once per branch
-        # — measured as two full __fp dedup shuffles in the q80 plan, and
-        # up to ~6 re-executions with all three stages on. Persist the
-        # curated base once; freed after the shard/pack writes.
-        from pyspark import StorageLevel
+        # near-dup dedup -> perplexity band (CCNet-style, fit on the
+        # trusted corpus) -> n-gram decontamination against the eval set,
+        # each stage optional; the survivors come back materialized, the
+        # barrier the self-joins and substring dedup's ~3 reads need
+        def read(path):
+            return spark.read.parquet(path) if path else None
 
-        curated = curated.persist(StorageLevel.MEMORY_AND_DISK)
-        base_curated = curated
-    if args.neardup:
-        # fuzzy dedup between curation and the perplexity band — the
-        # RefinedWeb/Dolma-standard stage curation's EXACT dedup cannot
-        # cover (boilerplate variants, templated pages). MinHash pairs ->
-        # connected components -> keep each cluster's min-id survivor
-        # (operators/neardup.py:neardup_dedup; bucket guard always on).
-        from movie_recommendation_etl_spark.operators.neardup import (
-            neardup_dedup,
-        )
-
-        nstats: dict = {}
-        curated = neardup_dedup(
+        curated = filter_training_documents(
             curated,
-            threshold=args.neardup_threshold,
+            neardup_threshold=args.neardup_threshold if args.neardup else None,
+            trusted=read(args.trusted_path),
+            keep_fraction=args.perplexity_keep,
+            eval_set=read(args.eval_path),
+            ngram=args.decontam_ngram,
+            contamination_threshold=args.decontam_threshold,
+            bloom_bits=args.decontam_bloom_bits,
             checkpoint_dir=args.checkpoint_dir,
-            stats=nstats,
+            stats=stats,
         )
+    if args.neardup:
         # Surface the guard counters with the drop count (r17, VERDICT
         # r16 #7): a production run must see WHEN the bucket guard fired —
         # it trades exact cliques for star certificates, which changes
         # cluster granularity — not re-run with logging cranked up to find
         # out.
         guard_bits = [
-            f"{nstats.get('overflow_buckets', 0)} overflow bucket(s)"
+            f"{stats.get('overflow_buckets', 0)} overflow bucket(s)"
         ]
-        if "max_bucket_size_seen" in nstats:
+        if "max_bucket_size_seen" in stats:
             guard_bits.append(
-                f"largest bucket {nstats['max_bucket_size_seen']}"
+                f"largest bucket {stats['max_bucket_size_seen']}"
             )
         print(
-            f"neardup: dropped {nstats.get('neardup_losers', 0)} "
+            f"neardup: dropped {stats.get('neardup_losers', 0)} "
             f"near-duplicate doc(s) at jaccard >= {args.neardup_threshold} "
-            f"({nstats.get('cc_rounds', 0)} CC round(s); "
+            f"({stats.get('cc_rounds', 0)} CC round(s); "
             + ", ".join(guard_bits)
             + ")",
             file=sys.stderr,
-        )
-    if args.trusted_path:
-        # perplexity band filter between the rule-based quality gate and
-        # decontamination (operators/perplexity.py): fit a unigram model on
-        # the trusted corpus, keep the lowest-cross-entropy band of the
-        # curated docs (CCNet-style head/middle selection)
-        from movie_recommendation_etl_spark.operators.perplexity import (
-            perplexity_band,
-        )
-
-        trusted = spark.read.parquet(args.trusted_path)
-        band = perplexity_band(
-            curated, trusted, keep_fraction=args.perplexity_keep
-        )
-        curated = curated.join(
-            band.select("doc_id"), "doc_id", "left_semi"
-        )
-    if args.eval_path:
-        # benchmark decontamination before chunking: drop every curated doc
-        # whose n-gram overlap with the held-out eval set clears the
-        # threshold (operators/decontaminate.py; broadcast eval grams —
-        # or, with --decontam-bloom-bits, a broadcast Bloom bitmap +
-        # exact confirm join for eval sets too big to broadcast whole;
-        # results are identical by construction)
-        from movie_recommendation_etl_spark.operators.decontaminate import (
-            ngram_contamination,
-            ngram_contamination_bloom,
-        )
-
-        ev = spark.read.parquet(args.eval_path)
-        if args.decontam_bloom_bits:
-            verdicts = ngram_contamination_bloom(
-                curated,
-                ev,
-                n=args.decontam_ngram,
-                ratio_threshold=args.decontam_threshold,
-                num_bits=args.decontam_bloom_bits,
-            )
-        else:
-            verdicts = ngram_contamination(
-                curated,
-                ev,
-                n=args.decontam_ngram,
-                ratio_threshold=args.decontam_threshold,
-            )
-        curated = curated.join(
-            verdicts.filter("NOT is_contaminated").select("doc_id"),
-            "doc_id",
-            "left_semi",
         )
     if args.substring_dedup:
         # cross-document boilerplate removal (operators/substring_dedup.py):
@@ -569,8 +514,6 @@ def _cmd_trainprep(args: argparse.Namespace) -> int:
         spark, pack_dir, count_col="n_tokens_in_seq",
         extra={"seq_len": args.seq_len},
     )
-    if base_curated is not None:
-        base_curated.unpersist()
     print(
         json.dumps(
             {
@@ -1456,6 +1399,9 @@ def _cmd_neardup(args: argparse.Namespace) -> int:
             "doc_a",
             "doc_b",
             checkpoint_dir=args.checkpoint_dir,
+            # verified pairs are distinct with doc_a < doc_b, as in
+            # neardup_dedup: skip the symmetrized edges' distinct shuffle
+            edges_distinct=True,
             stats=cstats,
         )
         out = cc.select(F.col("node").alias(args.id_col), "cluster_id")

@@ -56,6 +56,18 @@ def load_default_lemmas() -> dict[str, str]:
     return json.loads(_LEMMA_FIXTURE.read_text())
 
 
+def _lemma_map_literal(lemma_map: dict[str, str]) -> str:
+    """The dictionary as a SQL map literal, keys sorted — the one M4
+    construction both the pipeline stage (_lemma_stage) and the Column
+    form (lemmatize) bake into their plans."""
+
+    def q(s: str) -> str:
+        return "'" + s.replace("\\", "\\\\").replace("'", "''") + "'"
+
+    entries = ", ".join(f"{q(k)}, {q(v)}" for k, v in sorted(lemma_map.items()))
+    return f"map({entries})"
+
+
 def _lemma_stage(lemma_map: dict[str, str]) -> SQLTransformer:
     """M4 as a real pipeline stage: a SQLTransformer whose statement maps
     each token through a map literal (miss → token unchanged). Pure Catalyst
@@ -64,15 +76,10 @@ def _lemma_stage(lemma_map: dict[str, str]) -> SQLTransformer:
     tokenizer and stopword removal, the reference's annotator order
     (transform/execute.py:184-218: Tokenizer → Normalizer → Lemmatizer →
     StopWordsCleaner)."""
-
-    def q(s: str) -> str:
-        return "'" + s.replace("'", "''") + "'"
-
-    entries = ", ".join(f"{q(k)}, {q(v)}" for k, v in sorted(lemma_map.items()))
     stmt = (
         "SELECT *, transform(__tokens, t -> "
-        f"coalesce(try_element_at(map({entries}), t), t)) AS __lemmas "
-        "FROM __THIS__"
+        f"coalesce(try_element_at({_lemma_map_literal(lemma_map)}, t), t)) "
+        "AS __lemmas FROM __THIS__"
     )
     return SQLTransformer(statement=stmt)
 
@@ -219,16 +226,12 @@ def lemmatize(tokens: Column, lemma_map: dict[str, str]) -> Column:
     execute.py:198-202). Core Spark has no lemmatizer; for a bounded
     dictionary the idiomatic formulation is a broadcast map baked into the
     plan — here as a chain of element-level replacements via F.transform +
-    a map literal (try_element_at returns NULL for misses → coalesce keeps
-    the original token). No Python UDF, no shuffle.
+    the map literal _lemma_stage uses (try_element_at returns NULL for
+    misses → coalesce keeps the original token). No Python UDF, no shuffle.
     """
     if not lemma_map:
         return tokens
-    pairs: list[Column] = []
-    for k, v in lemma_map.items():
-        pairs.append(F.lit(k))
-        pairs.append(F.lit(v))
-    m = F.create_map(*pairs)
+    m = F.expr(_lemma_map_literal(lemma_map))
     return F.transform(
         tokens, lambda t: F.coalesce(F.try_element_at(m, t), t)
     )

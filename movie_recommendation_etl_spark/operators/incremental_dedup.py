@@ -346,11 +346,11 @@ def _admit_batch(
     with reliable_checkpoint_scope(spark, checkpoint_dir) as _ckpt:
         bands = _ckpt(bands)
         # NO right_size_materialized here (added r17, REVERTED r18 by A/B
-        # adjudication — scripts/ab_r17_sweep.py): unlike the q53 band hub
-        # (64 near-empty partitions feeding many stages), the admission
-        # batch's band frame is consumed by only three short joins, and
-        # the helper's extra count job + plan-to-RDD conversion per
-        # admission batch measured a consistent ~4-5% NET COST at bench
+        # adjudication — scripts/ab_r17_sweep.py, commit c9385d1): unlike
+        # the q53 band hub (64 near-empty partitions feeding many stages),
+        # the admission batch's band frame is consumed by only three short
+        # joins, and the helper's extra count job + plan-to-RDD conversion
+        # per admission batch measured a consistent ~4-5% NET COST at bench
         # scale (min 3.11 s with vs 2.94 s without, 5 samples each, calm
         # host) — the r17 +34% bench delta was otherwise host regime.
         intra = _intra_rejects(

@@ -743,7 +743,8 @@ def extract_frame_features(
     """One output row per sampled frame per input video — the fan-out shape
     of a frame-embedding pipeline (swap the px_mean stat for a model
     forward pass at the same seam). The id column keeps the input's name
-    and type (r6 ADVICE)."""
+    and type (r6 ADVICE). A NULL payload yields one row with its id and
+    NULL frame fields, as the sibling extractors do."""
     out_schema = _spliced_schema(
         media, id_col, list(FRAME_FEATURES_SCHEMA.fields[1:])
     )
@@ -754,6 +755,12 @@ def extract_frame_features(
         for pdf in it:
             out: dict[str, list] = {f.name: [] for f in out_schema.fields}
             for doc_id, blob in zip(pdf[id_col], pdf[data_col]):
+                if blob is None:
+                    # dropped-payload video: one row with the id and NULL
+                    # frame fields — one bad row must not kill the task
+                    for name in out:
+                        out[name].append(doc_id if name == id_col else None)
+                    continue
                 b = bytes(blob)
                 spans = _index_pnm_frames(b)
                 spans_total = len(spans)

@@ -1,10 +1,13 @@
-"""Training-set preparation: chunking, deterministic shuffle, sharded write.
+"""Training-set preparation: filtering, chunking, deterministic shuffle,
+sharded write.
 
 The last mile of a training-data pipeline after curation (operators/
-curate.py): split documents into token-bounded chunks with overlap, shuffle
-the corpus so batches decorrelate from crawl/source order, and write
-fixed-size shards. All three are pure Catalyst / writer-option constructs —
-no Python in the row path.
+curate.py): drop near-duplicate, off-domain and contaminated documents
+(filter_training_documents, one composition of the filter operators),
+split documents into token-bounded chunks with overlap, shuffle the corpus
+so batches decorrelate from crawl/source order, and write fixed-size
+shards. The last three are pure Catalyst / writer-option constructs — no
+Python in the row path.
 
 Scale shape: chunking is a scan-stage explode (output rows ∝ corpus tokens
 / chunk size); the shuffle is ONE range exchange on a hash key (that is
@@ -22,9 +25,75 @@ from collections.abc import Sequence
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from movie_recommendation_etl_spark.operators.decontaminate import (
+    ngram_contamination,
+    ngram_contamination_bloom,
+)
+from movie_recommendation_etl_spark.operators.neardup import neardup_dedup
+from movie_recommendation_etl_spark.operators.perplexity import (
+    perplexity_band,
+)
 from movie_recommendation_etl_spark.sources.writers import (
     write_sorted_parquet,
 )
+
+
+def filter_training_documents(
+    curated: DataFrame,
+    *,
+    neardup_threshold: float | None = None,
+    trusted: DataFrame | None = None,
+    keep_fraction: float,
+    eval_set: DataFrame | None = None,
+    ngram: int,
+    contamination_threshold: float,
+    bloom_bits: int | None = None,
+    checkpoint_dir: str | None = None,
+    stats: dict | None = None,
+) -> DataFrame:
+    """The trainprep filter chain between curation and substring dedup;
+    each stage runs only when its argument is given: near-dup dedup at
+    ``neardup_threshold`` (``checkpoint_dir`` and ``stats`` pass through
+    to neardup_dedup) → the lowest-cross-entropy ``keep_fraction`` band
+    against a unigram model fit on ``trusted`` → decontamination, dropping
+    docs whose ``ngram``-gram overlap with ``eval_set`` reaches
+    ``contamination_threshold`` (through a ``bloom_bits``-bit Bloom bitmap
+    when set; same verdicts).
+
+    Returns the survivors, materialized. Each stage is a self-join, so
+    ``curated`` is materialized first or the curation subtree would run
+    once per branch; the survivors are materialized because
+    remove_duplicate_spans reads its input ~3x. With no filter stage the
+    two barriers are one. The band's score cache is released once the
+    survivors are materialized."""
+    docs = curated.localCheckpoint(eager=True)
+    if neardup_threshold is None and trusted is None and eval_set is None:
+        return docs
+    if neardup_threshold is not None:
+        docs = neardup_dedup(
+            docs, threshold=neardup_threshold,
+            checkpoint_dir=checkpoint_dir, stats=stats,
+        )
+    scores: list = []
+    if trusted is not None:
+        band = perplexity_band(
+            docs.select("doc_id", "text"), trusted,
+            keep_fraction=keep_fraction, scores_out=scores,
+        )
+        docs = docs.join(band.select("doc_id"), "doc_id", "left_semi")
+    if eval_set is not None:
+        kw = dict(n=ngram, ratio_threshold=contamination_threshold)
+        verdicts = (
+            ngram_contamination_bloom(docs, eval_set, num_bits=bloom_bits, **kw)
+            if bloom_bits
+            else ngram_contamination(docs, eval_set, **kw)
+        )
+        clean = verdicts.filter(~F.col("is_contaminated")).select("doc_id")
+        docs = docs.join(clean, "doc_id", "left_semi")
+    docs = docs.localCheckpoint(eager=True)
+    for cached in scores:
+        cached.unpersist()
+    return docs
 
 
 def chunk_documents(

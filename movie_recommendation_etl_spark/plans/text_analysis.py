@@ -41,8 +41,9 @@ from movie_recommendation_etl_spark.sources.catalog import load_table
 # corpus-induction path uses forward) unioned with the shipped irregular
 # fixture, which wins on key conflicts (irregulars are a dictionary's job).
 # ~140 entries, well under ml/tfidf._LEMMA_LITERAL_MAX, so the REAL
-# map-literal Catalyst path (lemmatize()) is what executes — the same code
-# the TF-IDF pipeline's _lemma_stage bakes into its plan. The corpus is
+# map-literal Catalyst path (lemmatize()) is what executes — built from
+# the same map literal (ml/tfidf._lemma_map_literal) the TF-IDF pipeline's
+# _lemma_stage bakes into its statement. The corpus is
 # all base forms, so the arm PLANTS hits: 8 inflected keys per doc chosen
 # by (doc_id*7 + j*13) % |keys| are appended to the token stream before
 # mapping — a corrupted lemma map (wrong value, missing key, broken
@@ -225,8 +226,8 @@ def q40_text_profile_suite(spark: SparkSession, sf_dir: str) -> DataFrame:
     lives in tests/test_quality_model.py.
 
     r10: the M4 lemmatizer joins as the ``lemma_fp``/``n_lemmatized`` arm
-    — the REAL ≤1024-entry map-literal path (ml/tfidf.py:lemmatize, the
-    same construction _lemma_stage bakes into the TF-IDF pipeline)
+    — the REAL ≤1024-entry map-literal path (ml/tfidf.py:lemmatize, built
+    from the map literal _lemma_stage bakes into the TF-IDF pipeline)
     applied to the doc tokens plus 8 planted inflected keys per doc, so
     the dictionary provably fires and a corrupted lemma map or broken
     morphology expansion (ml/lemmas.py) hash-fails instead of silently

@@ -29,6 +29,7 @@ from movie_recommendation_etl_spark.operators.curate import (
 from movie_recommendation_etl_spark.operators.training_prep import (
     chunk_documents,
     chunk_documents_by_budget,
+    filter_training_documents,
 )
 from movie_recommendation_etl_spark.plans.curation import _sql_hex8_to_bigint
 from movie_recommendation_etl_spark.plans.dedup_similarity import (
@@ -1431,9 +1432,11 @@ def q80_trainprep_composed(spark: SparkSession, sf_dir: str) -> DataFrame:
     → chunk_documents ({_CHUNK_TOKENS}-token chunks, {_OVERLAP} overlap,
     the q73 construction) → pack_sequences ({_Q80_SEQ_LEN}-token
     sequences in {_Q80_SHARDS} md5-keyed shards, the q77 construction
-    with the chunked compound key). This is the trainprep CLI's FULL
-    lifecycle. The stages are individually gated by q72/q79/q76/q78/
-    q73/q77; this gate proves the COMPOSITION — the band scores the
+    with the chunked compound key). The fuzzy dedup → band →
+    decontamination chain is training_prep.filter_training_documents, the
+    function the trainprep command calls, so this gate covers the
+    command's chain. The stages are individually gated by q72/q79/q76/
+    q78/q73/q77; this gate proves the COMPOSITION — the band scores the
     redacted survivor text, decontamination reads the banded stream,
     substring dedup rebuilds the decontaminated one, chunking the rebuilt
     text — with per-chunk content lineage: each packed slice carries the
@@ -1442,13 +1445,14 @@ def q80_trainprep_composed(spark: SparkSession, sf_dir: str) -> DataFrame:
     extra join, one window).
 
     Scale shape: scan-stage curation filters ahead of the single dedup
-    shuffle; the curated base is materialized ONCE (localCheckpoint — it
-    feeds the band target, the contamination verdicts, and each stage's
-    semi-join left side; without the barrier the curation subtree
-    executes once per branch, measured as a doubled __fp exchange), and
-    so are the decontaminated survivors (remove_duplicate_spans consumes
-    its input ~3x); the unigram model and eval grams ride broadcasts; the
-    perplexity score frame is persisted (the q79 cache-lifecycle
+    shuffle; filter_training_documents materializes the curated base ONCE
+    (localCheckpoint — it feeds the band target, the contamination
+    verdicts, and each stage's semi-join left side; without the barrier
+    the curation subtree executes once per branch, measured as a doubled
+    __fp exchange), and so are the decontaminated survivors
+    (remove_duplicate_spans consumes its input ~3x); the unigram model and
+    eval grams ride broadcasts; the perplexity score frame is persisted
+    until the survivors are materialized (the q79 cache-lifecycle
     contract); the chunk explode is scan-stage and pack is one
     hash-partitioned window. A 100 TB corpus pays eight big-data shuffles
     total (dedup keys, the fuzzy stage's banded self-join, model fit,
@@ -1488,55 +1492,24 @@ def q80_trainprep_composed(spark: SparkSession, sf_dir: str) -> DataFrame:
         sample_fraction=0.5,
         sample_unif=unif,
     )
-    # curated feeds the perplexity-band target, the contamination
-    # verdicts, AND each stage's semi-join left side — materialize it once
-    # (q74's pattern) or the whole curation subtree (incl. its dedup
-    # shuffle) executes once per branch in one action
-    curated = curated.localCheckpoint(eager=True)
-    # FUZZY DEDUP between curation and the band (r17, VERDICT r16 #2 —
-    # exactly where trainprep --neardup runs, cli.py): MinHash pairs over
-    # the redacted survivor text -> connected components -> min-id
-    # survivor. The +2000000 truncated twins planted above make the stage
-    # provably drop rows; the oracle replays the identical md5-family
-    # MinHash + recursive-CTE closure over its curated CTE.
-    from movie_recommendation_etl_spark.operators.neardup import (
-        neardup_dedup,
-    )
-
-    curated = neardup_dedup(curated, threshold=0.8)
-    from movie_recommendation_etl_spark.operators.perplexity import (
-        perplexity_band,
-    )
-
-    trusted = docs.filter(_trusted_first_hex()).select("doc_id", "text")
-    band = perplexity_band(
-        curated.select("doc_id", "text"), trusted, keep_fraction=_Q79_KEEP
-    )
-    curated = curated.join(band.select("doc_id"), "doc_id", "left_semi")
-    from movie_recommendation_etl_spark.operators.decontaminate import (
-        ngram_contamination,
-    )
-
-    ev = docs.filter(
-        F.md5(F.col("doc_id").cast("string")).substr(1, 1) == "0"
-    )
-    verdicts = ngram_contamination(
-        curated, ev, n=5, ratio_threshold=0.05
-    )
-    decon = curated.join(
-        verdicts.filter(~F.col("is_contaminated")).select("doc_id"),
-        "doc_id",
-        "left_semi",
+    # FUZZY DEDUP -> PERPLEXITY BAND -> DECONTAMINATION, the trainprep
+    # command's own chain; the +2000000 twins make fuzzy dedup provably
+    # drop rows (the oracle replays its MinHash + recursive-CTE closure)
+    decon = filter_training_documents(
+        curated,
+        neardup_threshold=0.8,
+        trusted=docs.filter(_trusted_first_hex()).select("doc_id", "text"),
+        keep_fraction=_Q79_KEEP,
+        eval_set=docs.filter(
+            F.md5(F.col("doc_id").cast("string")).substr(1, 1) == "0"
+        ),
+        ngram=5,
+        contamination_threshold=0.05,
     )
     from movie_recommendation_etl_spark.operators.substring_dedup import (
         remove_duplicate_spans,
     )
 
-    # remove_duplicate_spans consumes its input ~3x (window enumeration,
-    # dup-gram probe, rebuild join) — materialize the decontaminated
-    # survivors once so the band/decon semi-join chain doesn't re-execute
-    # per consumer
-    decon = decon.localCheckpoint(eager=True)
     # plant the q78 boilerplate on the decontaminated survivors so the
     # substring stage provably removes spans (the corpus has no natural
     # >=20-token cross-doc repeats), then rebuild each doc's text with the

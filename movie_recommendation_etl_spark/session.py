@@ -42,11 +42,11 @@ def default_parallelism() -> int:
     return int(os.environ.get("SPARK_GRAFT_CPUS", os.cpu_count() or 8))
 
 
-def host_ram_bytes(*, available: bool = False) -> int | None:
-    """This host's physical RAM in bytes (``available=True``: the RAM free
-    right now), from sysconf; None where the platform does not expose it."""
+def host_ram_bytes() -> int | None:
+    """This host's physical RAM in bytes, from sysconf; None where the
+    platform does not expose it."""
     try:
-        pages = os.sysconf("SC_AVPHYS_PAGES" if available else "SC_PHYS_PAGES")
+        pages = os.sysconf("SC_PHYS_PAGES")
         return pages * os.sysconf("SC_PAGE_SIZE")
     except (AttributeError, ValueError, OSError):
         return None

@@ -1,7 +1,7 @@
 """Time individual bench lines (same noop-sink methodology as bench.py)
-for targeted before/after measurement during the r19 optimization round.
+for targeted before/after measurement.
 
-Usage: python scripts/time_lines_r19.py <line> [<line> ...] [--n 3]
+Usage: python scripts/time_lines.py <line> [<line> ...] [--n 3]
 Prints one JSON line: {"<line>": [samples...], ...} (all samples kept —
 min is the estimator, spread is the witness).
 """
@@ -58,7 +58,7 @@ def main() -> int:
         warm_catalog,
     )
 
-    spark = get_spark(app_name="time_lines_r19")
+    spark = get_spark(app_name="time_lines")
     spark.sparkContext.setLogLevel("ERROR")
 
     def _noop(df) -> None:
@@ -84,7 +84,7 @@ def main() -> int:
         fn = runnable[name]
         samples = []
         for _ in range(n):
-            spark.sparkContext.setJobDescription(f"r19 timing: {name}")
+            spark.sparkContext.setJobDescription(f"timing: {name}")
             t0 = time.monotonic()
             _noop(fn(spark, SF_DIR))
             samples.append(round(time.monotonic() - t0, 3))

@@ -337,7 +337,11 @@ def test_feature_extraction_null_payload_rows(spark):
     from pyspark.sql import functions as F
 
     from movie_recommendation_etl_spark.operators.multimodal import (
+        attach_fake_audio,
         attach_fake_media,
+        attach_fake_videos,
+        extract_audio_features,
+        extract_frame_features,
         extract_media_features,
     )
 
@@ -358,6 +362,31 @@ def test_feature_extraction_null_payload_rows(spark):
     assert rows[2]["content_md5"] is None
     assert rows[2]["n_bytes"] is None
     assert rows[2]["media_type"] == "fake/blob"  # meta survived
+
+    # the video and audio extractors follow the same policy
+    def null_payload(df):
+        return df.withColumn(
+            "media_data",
+            F.when(F.col("doc_id") == 2, F.lit(None)).otherwise(
+                F.col("media_data")
+            ),
+        )
+
+    frames = extract_frame_features(
+        null_payload(attach_fake_videos(docs)), n_frames=2
+    ).collect()
+    assert sorted(r["doc_id"] for r in frames) == [1, 1, 2]
+    (dropped,) = [r for r in frames if r["doc_id"] == 2]
+    assert all(dropped[k] is None for k in dropped.asDict() if k != "doc_id")
+    audio = {
+        r["doc_id"]: r
+        for r in extract_audio_features(
+            null_payload(attach_fake_audio(docs)), decode=True
+        ).collect()
+    }
+    assert audio[1]["rms"] is not None
+    assert audio[2]["n_bytes"] is None and audio[2]["rms"] is None
+    assert audio[2]["media_type"] == "audio/wav"
 
 
 def test_resize_null_payload_rows(spark, sf_dir):

@@ -19,6 +19,10 @@ def test_lemmatize_broadcast_map(spark):
     lemmas = {"running": "run", "ran": "run", "dogs": "dog"}
     out = df.select(lemmatize(F.col("toks"), lemmas).alias("lem")).collect()[0]
     assert out["lem"] == ["run", "dog", "unknown", "run"]
+    # quotes and backslashes survive the SQL map literal
+    odd = {"ran": "it's", "dogs": "a\\b", "running": "\\'"}
+    out = df.select(lemmatize(F.col("toks"), odd).alias("lem")).collect()[0]
+    assert out["lem"] == ["\\'", "a\\b", "unknown", "it's"]
     # empty map is the identity
     ident = df.select(lemmatize(F.col("toks"), {}).alias("lem")).collect()[0]
     assert ident["lem"] == ["running", "dogs", "unknown", "ran"]
